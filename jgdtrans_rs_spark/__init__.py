@@ -23,6 +23,8 @@ Layout:
     streaming/   structured-streaming ingest (batch parity first)
 """
 
+import os
+
 from .workerenv import patch_zipimport_invalidate_caches
 
 # Applied at import so every Spark Python WORKER that unpickles a
@@ -30,7 +32,9 @@ from .workerenv import patch_zipimport_invalidate_caches
 # every zip directory on sys.path on each per-task
 # importlib.invalidate_caches() — ~165 ms of worker CPU per task on
 # this build; the 3.12-style mtime guard removes it (workerenv.py).
-patch_zipimport_invalidate_caches()
+# SPARK_GRAFT_ZIPGUARD=0 leaves zipimport untouched.
+if os.environ.get("SPARK_GRAFT_ZIPGUARD", "1") != "0":
+    patch_zipimport_invalidate_caches()
 
 from .grid import MeshGrid, load_par, parse_par
 from .kernel import (

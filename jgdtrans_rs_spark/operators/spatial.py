@@ -17,7 +17,14 @@ Scale design:
   salted explicitly: hot points get a deterministic salt from their
   key, the polygon side is replicated per salt — bounded reducer fan-in
   regardless of skew.  Output is a set of (key, poly_id) pairs,
-  identical across parallelism levels.
+  identical across parallelism levels.  The exact refine is ONE SQL
+  expression (``containment_sql``: crossing-number parity over the
+  candidate ring's edges) reached through a single ``F.expr``; the
+  ring data ride an N-row relation of per-ring edge columns
+  (``edge_columns``; doubles as exact ``CAST('<repr>' AS DOUBLE)``
+  literals, localrel.py).  Building the plan makes no JVM call per
+  polygon or edge, and the generated code grows with the widest ring
+  only.  ``SqlEngine.transform_pip`` joins on the same expression.
 * ``knn_mesh_nodes`` — for a point inside a rectangular lattice cell
   the 4 nearest nodes are exactly the cell corners, so the candidate
   set is local: compute 4 distances per point in the batch kernel and
@@ -59,33 +66,56 @@ def _crossings(lat: np.ndarray, lon: np.ndarray, ring: list[tuple[float, float]]
     return inside % 2
 
 
-def _ring_parity_col(ring: list[tuple[float, float]], lat, lon) -> "F.Column":
-    """Crossing-number parity of ONE ring as a pure Column expression
-    (same edge formula as _crossings and the SQL oracle, bit-identical
-    float64 ops).  Stays entirely inside whole-stage codegen."""
-    crossings = None
-    n = len(ring)
-    for j in range(n):
-        y1, x1 = ring[j]
-        y2, x2 = ring[(j + 1) % n]
-        if y1 == y2:
-            continue  # horizontal edge never crosses the test ray
-        hit = ((F.lit(y1) > lat) != (F.lit(y2) > lat)) & (
-            lon < (x2 - x1) * (lat - F.lit(y1)) / (y2 - y1) + x1
-        )
-        term = F.when(hit, 1).otherwise(0)
-        crossings = term if crossings is None else crossings + term
-    return (crossings % 2 == 1) if crossings is not None else F.lit(False)
+_EDGE_FIELDS = ("y1", "y2", "dx", "dy", "x1")
+# padding for rings with fewer edges than the widest: y1 == y2, so the
+# straddle test is false and the edge never crosses the test ray
+_NO_EDGE = (0.0, 0.0, 0.0, 1.0, 0.0)
 
 
-def _containment_col(rings: list[list[tuple[float, float]]],
-                     lat, lon, pidx) -> "F.Column":
-    """Per-polygon ring parity dispatched on the candidate's poly_idx."""
-    out = None
-    for i, ring in enumerate(rings):
-        inside = _ring_parity_col(ring, lat, lon)
-        out = F.when(pidx == i, inside) if out is None else out.when(pidx == i, inside)
-    return F.lit(False) if out is None else out.otherwise(F.lit(False))
+def edge_columns(rings: list[list[tuple[float, float]]]):
+    """Each ring's crossing-test edges as ONE row of double columns ->
+    (width, ddl, rows): ``width`` edges per row, at the widest ring's
+    count; ``ddl`` the local_rows_df schema fragment
+    ``", _e0_y1 double, _e0_y2 double, _e0_dx double, ..."``; one row
+    per ring.  Horizontal edges are dropped, as _crossings skips them;
+    shorter rings are padded with never-crossing edges.  ``dx = x2-x1``
+    and ``dy = y2-y1`` are folded here, exactly as _crossings folds
+    them, so the SQL runs the same float64 ops in the same order."""
+    edges = [
+        [(y1, y2, x2 - x1, y2 - y1, x1)
+         for (y1, x1), (y2, x2) in zip(r, r[1:] + r[:1]) if y1 != y2]
+        for r in rings
+    ]
+    width = max((len(e) for e in edges), default=0)
+    ddl = "".join(f", _e{k}_{f} double" for k in range(width) for f in _EDGE_FIELDS)
+    rows = [tuple(v for edge in e + [_NO_EDGE] * (width - len(e)) for v in edge)
+            for e in edges]
+    return width, ddl, rows
+
+
+def containment_sql(width: int, lat: str, lon: str) -> str:
+    """Crossing-number containment of (``lat``, ``lon``) in the ring
+    whose edge_columns (``width`` edges) sit on the same row, as ONE
+    SQL boolean expression for a single ``F.expr``.
+
+    Per edge: ((y1 > lat) <> (y2 > lat)) AND
+    lon < ((dx * (lat - y1)) / dy) + x1 — the edge formula of
+    _crossings and the SQL oracle (oracle.point_in_polygon_sql) with the
+    same float64 ops in the same order.  The polygon data are column
+    values, not literals, so the expression's size follows the widest
+    ring, not the polygon count: its generated code stays under the
+    JVM's 8 KB limit for JIT compilation at ordinary ring sizes (one
+    CASE over every polygon's edge literals did not, and ran
+    interpreted: ~6x the executor CPU of this form at 6 x 8 edges),
+    and building it makes no JVM call at all."""
+    if not width:
+        return "false"
+    terms = " + ".join(
+        f"CASE WHEN ((_e{k}_y1 > {lat}) <> (_e{k}_y2 > {lat})) AND "
+        f"{lon} < (((_e{k}_dx * ({lat} - _e{k}_y1)) / _e{k}_dy) + _e{k}_x1) "
+        "THEN 1 ELSE 0 END"
+        for k in range(width))
+    return f"(({terms}) % 2) = 1"
 
 
 def point_in_polygon(df: DataFrame, polygons: Sequence[Polygon],
@@ -185,13 +215,11 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
         # unions cleanly with the non-empty path whatever the key type
         return points.select(key).limit(0).withColumn(
             "poly_id", F.lit(None).cast("string"))
-    # the candidate side carries BOTH the integer dispatch index (the
-    # containment refine dispatches on it — int compare in codegen,
-    # and the pandas fallback ships only (lat, lon, poly_idx) through
-    # Arrow) and the poly_id string, so no name-reattach join is
-    # needed after the refine (r06: the trailing broadcast join over
-    # every refined row was a leftover from when the refine ran in
-    # Python and strings were kept out of the hop)
+    # the candidate side carries BOTH the integer ring index (the
+    # refine picks up the ring's edge columns by it — an int hash key
+    # in codegen, and the pandas fallback ships only (lat, lon,
+    # poly_idx) through Arrow) and the poly_id string, so no
+    # name-reattach join is needed after the refine
     pid_to_idx = {pid: i for i, (pid, _) in enumerate(polygons)}
     if len(pid_to_idx) != len(polygons):
         # a duplicate id would silently collapse onto ONE ring here
@@ -231,39 +259,44 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
         schema=f"{mesh_col} long, poly_idx int, poly_id string, _salt int",
     )
 
-    joined = pts.join(F.broadcast(cand_salted), [mesh_col, "_salt"])
+    joined = pts.join(F.broadcast(cand_salted), [mesh_col, "_salt"]).select(
+        key, lat, lon, "poly_idx", "poly_id")
 
     # exact containment test on the surviving candidates.  The rings
-    # are driver-side constants, so for normal-size polygon sets the
-    # crossing-number parity compiles to a pure Column expression —
-    # the whole refine step stays in codegen (no second Python stage
-    # after the transform UDF).  Very large rings fall back to the
-    # vectorized pandas_udf to keep the expression tree bounded.
+    # are driver-side constants: for normal-size rings each candidate
+    # picks up its ring's edge columns (edge_columns — one N-row
+    # relation, a broadcast hash join on poly_idx) and the crossing
+    # parity is one SQL expression (containment_sql) whose size follows
+    # the widest ring — the whole refine step stays in codegen (no
+    # second Python stage after the transform UDF).  Very large rings
+    # fall back to the vectorized pandas_udf to keep the expression
+    # tree bounded.
     rings = [[(float(a), float(b)) for a, b in ring] for _, ring in polygons]
-    n_edges = sum(len(r) for r in rings)
-    if n_edges <= 512:
-        contains_col = _containment_col(
-            rings, F.col(lat), F.col(lon), F.col("poly_idx"))
-    else:
-        @F.pandas_udf(BooleanType())
-        def contains(lat_s: pd.Series, lon_s: pd.Series, pidx_s: pd.Series) -> pd.Series:
-            la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            pidx = pidx_s.to_numpy(dtype=np.int32)
-            keep = np.zeros(la.shape[0], dtype=bool)
-            for i, ring in enumerate(rings):
-                mask = pidx == i
-                if mask.any():
-                    keep[mask] = _crossings(la[mask], lo[mask], ring) == 1
-            return pd.Series(keep)
+    width, ddl, edge_rows = edge_columns(rings)
+    if width <= 512:
+        edges = local_rows_df(
+            spark, [(i, *e) for i, e in enumerate(edge_rows)],
+            schema="poly_idx int" + ddl)
+        return (
+            joined.join(F.broadcast(edges), "poly_idx")
+            .filter(F.expr(containment_sql(width, f"`{lat}`", f"`{lon}`")))
+            .select(key, "poly_id")
+        )
 
-        contains_col = contains(F.col(lat), F.col(lon), F.col("poly_idx"))
+    @F.pandas_udf(BooleanType())
+    def contains(lat_s: pd.Series, lon_s: pd.Series, pidx_s: pd.Series) -> pd.Series:
+        la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
+        lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
+        pidx = pidx_s.to_numpy(dtype=np.int32)
+        keep = np.zeros(la.shape[0], dtype=bool)
+        for i, ring in enumerate(rings):
+            mask = pidx == i
+            if mask.any():
+                keep[mask] = _crossings(la[mask], lo[mask], ring) == 1
+        return pd.Series(keep)
 
-    return (
-        joined.select(key, lat, lon, "poly_idx", "poly_id")
-        .filter(contains_col)
-        .select(key, "poly_id")
-    )
+    return joined.filter(
+        contains(F.col(lat), F.col(lon), F.col("poly_idx"))).select(key, "poly_id")
 
 
 def knn_candidate_rows_cols(lat_d, lon_d, unit: int):

@@ -26,14 +26,22 @@ package -> the patch lands once per (reused) worker process; every
 subsequent task on that worker skips the re-parse.  The driver
 process is patched too, with the same semantics.  On 3.12+ this is a
 no-op (the interpreter already guards).
+
+Off switch: ``SPARK_GRAFT_ZIPGUARD=0`` in the environment of a process
+(driver or worker) makes the package import leave ``zipimport``
+untouched there; any other value, or none, applies the guard.  Each
+process that installs the guard logs it once, at INFO, on the
+``jgdtrans_rs_spark.workerenv`` logger.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import sys
 import zipimport
 
+_log = logging.getLogger(__name__)
 _KEY_ATTR = "_jgdtrans_zip_stat_key"
 _FLAG_ATTR = "_jgdtrans_mtime_guarded"
 
@@ -65,4 +73,6 @@ def patch_zipimport_invalidate_caches() -> bool:
     invalidate_caches.__doc__ = orig.__doc__
     zi.invalidate_caches = invalidate_caches
     setattr(zi, _FLAG_ATTR, True)
+    _log.info("zipimport mtime guard applied (pid %d); "
+              "SPARK_GRAFT_ZIPGUARD=0 disables it", os.getpid())
     return True

@@ -54,12 +54,36 @@ def semidyna_grid():
     return MeshGrid.from_dict(SEMIDYNA, "SemiDynaEXE")
 
 
+REFERENCE_TRANS_RS = "/root/reference/src/trans.rs"
+# what the two miners below read from it: the 42-node TKY2JGD Iwo Jima
+# table, the 20-node PatchJGD Kongoji table, and the 40 + 40 sampled
+# origins of the round-trip identity tests
+REFERENCE_RANGES = ("trans.rs:1340-1383 (TKY2JGD table), "
+                    "trans.rs:1386-1408 (PatchJGD table), "
+                    "trans.rs:1415-1500 (sampled origins)")
+
+
+def _reference_source() -> str:
+    """The reference test source the kernel fixtures are mined from.
+    Its absence is an error naming what is missing, never a skip or a
+    substitute grid: without it the round-trip identity tests have no
+    ground truth."""
+    try:
+        with open(REFERENCE_TRANS_RS, encoding="utf-8") as f:
+            return f.read()
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"{REFERENCE_TRANS_RS} not found: the kernel fixtures mine "
+            f"{REFERENCE_RANGES} of that paqira/jgdtrans-rs test source"
+        ) from None
+
+
 def reference_table(marker_start: str, marker_end: str):
     """Extract a (meshcode, (a, b, c)) constant table from the
     reference test source (read-only fixture mining, not code reuse)."""
     import re
 
-    src = open("/root/reference/src/trans.rs", encoding="utf-8").read()
+    src = _reference_source()
     seg = src[src.index(marker_start):src.index(marker_end)]
     rows = re.findall(r"\((\d{8}), \(([-0-9.e]+), ([-0-9.e]+), ([-0-9.e]+)\)\)", seg)
     return {int(c): (float(a), float(b), float(h)) for c, a, b, h in rows}
@@ -68,7 +92,7 @@ def reference_table(marker_start: str, marker_end: str):
 def reference_origins(marker_start: str, marker_end: str):
     import re
 
-    src = open("/root/reference/src/trans.rs", encoding="utf-8").read()
+    src = _reference_source()
     seg = src[src.index(marker_start):src.index(marker_end)]
     pts = re.findall(r"Point::new_unchecked\(([0-9.]+), ([0-9.]+), 0.0\)", seg)
     return [(float(a), float(b)) for a, b in pts]

@@ -31,6 +31,13 @@ def test_double_round_trip_bit_exact(spark):
     assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
     got = [r.v for r in df.collect()]
     assert [_bits(v[0]) for v in vals] == [_bits(g) for g in got]
+    # integers travel as suffix / bare literals, the type minimum as a
+    # CAST; every extreme must come back exact and keep its column type
+    ints = [(0, 0), (2 ** 63 - 1, 2 ** 31 - 1), (-(2 ** 63 - 1), -(2 ** 31 - 1)),
+            (-(2 ** 63), -(2 ** 31)), (None, None)]
+    df = local_rows_df(spark, ints, "b bigint, i int")
+    assert df.schema.simpleString() == "struct<b:bigint,i:int>"
+    assert [tuple(r) for r in df.collect()] == ints
 
 
 def test_string_int_bool_and_escaping(spark):

@@ -116,3 +116,54 @@ def test_forward_normalizes_output_across_lon_wrap(spark):
     assert k.status == 0 and s.status == 0
     assert k.out_lon < -179.9  # wrapped, not 180.01
     assert s.out_lon == k.out_lon and s.out_lat == k.out_lat  # bit-exact
+
+
+def _grid_polygons(n):
+    """n small concave (L-shaped) polygons tiled over the SemiDynaEXE
+    cell — six vertices each, ids unique."""
+    out = []
+    for i in range(n):
+        la = 36.0835 + (i // 10) * 0.0065
+        lo = 140.0627 + (i % 10) * 0.0062
+        out.append((f"syn_{i:03d}", [
+            (la, lo), (la, lo + 0.005), (la + 0.002, lo + 0.005),
+            (la + 0.002, lo + 0.002), (la + 0.006, lo + 0.002), (la + 0.006, lo)]))
+    return out
+
+
+def _executed_nodes(df):
+    """Node names of the executed physical plan, through the adaptive
+    and query-stage wrappers; a cached relation's own plan is not
+    descended into (it is not part of this query)."""
+    df.collect()  # so the adaptive plan is final
+    names, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        p = stack.pop()
+        names.append(p.nodeName())
+        if names[-1] == "AdaptiveSparkPlan":
+            stack.append(p.executedPlan())
+            continue
+        kids = p.children()
+        stack.extend(kids.apply(i) for i in range(kids.length()))
+        if names[-1].endswith("QueryStage"):
+            stack.append(p.plan())
+    return names
+
+
+def test_transform_pip_plan_is_flat_in_polygon_count(engines, pts):
+    """One broadcast nested-loop join against an N-row polygon relation:
+    the executed plan has the same nodes at 4 and at 60 polygons, no
+    Union (the old per-polygon branches), and still reads the persisted
+    (key, lat, lon) projection — without it Catalyst inlines the
+    transform into every lat/lon of the join condition."""
+    _, sql_eng = engines
+    shapes = {}
+    for n in (4, 60):
+        out = sql_eng.transform_pip(pts, _grid_polygons(n))
+        names = _executed_nodes(out)
+        assert "Union" not in names
+        assert names.count("BroadcastNestedLoopJoin") == 1
+        assert "InMemoryTableScan" in names
+        assert "InMemoryRelation" in out._jdf.queryExecution().executedPlan().toString()
+        shapes[n] = sorted(names)
+    assert shapes[4] == shapes[60]

@@ -5,11 +5,14 @@ re-read behind ~165 ms/task of Spark worker CPU; see workerenv.py).
 Pins: (a) importing the package applies the guard, (b) an UNCHANGED
 archive is not re-read on repeated invalidate_caches (the whole point),
 (c) a genuinely rewritten archive IS re-read and new contents become
-importable (the documented purpose of invalidate_caches survives)."""
+importable (the documented purpose of invalidate_caches survives),
+(d) SPARK_GRAFT_ZIPGUARD=0 leaves zipimport untouched at package import
+while unset / 1 applies the guard and logs it exactly once."""
 
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -67,3 +70,42 @@ def test_rewritten_archive_is_reread_and_importable(tmp_path):
     finally:
         sys.path.remove(zp)
         sys.modules.pop("zimod_probe", None)
+
+
+_PROBE = """
+import logging, sys, zipimport
+logging.basicConfig(level=logging.INFO, stream=sys.stdout, format="%(name)s %(message)s")
+import jgdtrans_rs_spark
+from jgdtrans_rs_spark.workerenv import patch_zipimport_invalidate_caches
+guarded = getattr(zipimport.zipimporter, "_jgdtrans_mtime_guarded", False)
+if guarded:
+    patch_zipimport_invalidate_caches()  # a second application must not log again
+print("GUARDED", guarded)
+"""
+
+
+def _import_in_fresh_process(switch):
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_ZIPGUARD"}
+    if switch is not None:
+        env["SPARK_GRAFT_ZIPGUARD"] = switch
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", _PROBE], env=env, cwd=root,
+                         capture_output=True, text=True, timeout=120, check=True)
+    lines = out.stdout.splitlines()
+    logged = [ln for ln in lines if ln.startswith("jgdtrans_rs_spark.workerenv ")]
+    return lines[-1], logged
+
+
+@needs_311
+@pytest.mark.parametrize("switch", [None, "1"])
+def test_zipguard_on_by_default_and_logged_once(switch):
+    last, logged = _import_in_fresh_process(switch)
+    assert last == "GUARDED True"
+    assert len(logged) == 1 and "mtime guard applied" in logged[0]
+
+
+@needs_311
+def test_zipguard_off_switch_leaves_zipimport_untouched():
+    last, logged = _import_in_fresh_process("0")
+    assert last == "GUARDED False"
+    assert logged == []
