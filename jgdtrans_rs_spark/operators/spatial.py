@@ -24,7 +24,9 @@ Scale design:
   (``edge_columns``; doubles as exact ``CAST('<repr>' AS DOUBLE)``
   literals, localrel.py).  Building the plan makes no JVM call per
   polygon or edge, and the generated code grows with the widest ring
-  only.  ``SqlEngine.transform_pip`` joins on the same expression.
+  only; rings wider than ``_SQL_REFINE_MAX_WIDTH`` edges, where that
+  code was measured slower, refine in a pandas_udf instead.
+  ``SqlEngine.transform_pip`` joins on the same expression.
 * ``knn_mesh_nodes`` — for a point inside a rectangular lattice cell
   the 4 nearest nodes are exactly the cell corners, so the candidate
   set is local: compute 4 distances per point in the batch kernel and
@@ -70,6 +72,17 @@ _EDGE_FIELDS = ("y1", "y2", "dx", "dy", "x1")
 # padding for rings with fewer edges than the widest: y1 == y2, so the
 # straddle test is false and the edge never crosses the test ray
 _NO_EDGE = (0.0, 0.0, 0.0, 1.0, 0.0)
+# widest ring (in crossing edges) bucketed_spatial_join refines in SQL;
+# wider rings take the pandas_udf refine.  Measured by
+# scripts/probe_refine_width.py (40k and 200k points, 6 and 47 star
+# rings, tree CPU of build + action, local[2] on a 4-core host): the SQL
+# refine took 0.5-1.0x the pandas refine's CPU at 4-8 edges, 0.7-1.7x
+# at 9-11, 4-19x at 12-16 (the whole-stage method outgrows the JVM's
+# 8 KB JIT limit and runs interpreted) and 1.5-2.5x at 24-32 (past
+# spark.sql.codegen.maxFields whole-stage codegen is off).  8 is the
+# widest at which it won or tied in every steady reading, 4 edges
+# short of the cliff
+_SQL_REFINE_MAX_WIDTH = 8
 
 
 def edge_columns(rings: list[list[tuple[float, float]]]):
@@ -103,11 +116,13 @@ def containment_sql(width: int, lat: str, lon: str) -> str:
     _crossings and the SQL oracle (oracle.point_in_polygon_sql) with the
     same float64 ops in the same order.  The polygon data are column
     values, not literals, so the expression's size follows the widest
-    ring, not the polygon count: its generated code stays under the
-    JVM's 8 KB limit for JIT compilation at ordinary ring sizes (one
-    CASE over every polygon's edge literals did not, and ran
-    interpreted: ~6x the executor CPU of this form at 6 x 8 edges),
-    and building it makes no JVM call at all."""
+    ring, not the polygon count, and building it makes no JVM call at
+    all.  Its generated code JIT-compiles up to about 11 edges; at
+    12-16 edges the whole-stage method outgrows the JVM's 8 KB JIT
+    limit and the refine took 4-19x the CPU of the pandas refine
+    (_SQL_REFINE_MAX_WIDTH has the measurement).  One CASE over every
+    polygon's edge literals passed that limit at 6 x 8 edges already,
+    and ran at ~6x the executor CPU of this form."""
     if not width:
         return "false"
     terms = " + ".join(
@@ -263,17 +278,17 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
         key, lat, lon, "poly_idx", "poly_id")
 
     # exact containment test on the surviving candidates.  The rings
-    # are driver-side constants: for normal-size rings each candidate
-    # picks up its ring's edge columns (edge_columns — one N-row
-    # relation, a broadcast hash join on poly_idx) and the crossing
-    # parity is one SQL expression (containment_sql) whose size follows
-    # the widest ring — the whole refine step stays in codegen (no
-    # second Python stage after the transform UDF).  Very large rings
-    # fall back to the vectorized pandas_udf to keep the expression
-    # tree bounded.
+    # are driver-side constants: when the widest ring has at most
+    # _SQL_REFINE_MAX_WIDTH crossing edges each candidate picks up its
+    # ring's edge columns (edge_columns — one N-row relation, a
+    # broadcast hash join on poly_idx) and the crossing parity is one
+    # SQL expression (containment_sql) whose size follows the widest
+    # ring — the whole refine step stays in JIT-compiled codegen (no
+    # second Python stage after the transform UDF).  Wider rings take
+    # the vectorized pandas_udf, which was measured cheaper there.
     rings = [[(float(a), float(b)) for a, b in ring] for _, ring in polygons]
     width, ddl, edge_rows = edge_columns(rings)
-    if width <= 512:
+    if width <= _SQL_REFINE_MAX_WIDTH:
         edges = local_rows_df(
             spark, [(i, *e) for i, e in enumerate(edge_rows)],
             schema="poly_idx int" + ddl)

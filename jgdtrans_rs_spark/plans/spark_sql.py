@@ -146,7 +146,10 @@ class SqlEngine:
         cannot change a verdict; it only skips the edge terms.  Building
         the plan costs a fixed number of JVM calls at any polygon or
         edge count, and the plan has the same nodes at any polygon
-        count.
+        count.  Being JVM-only, it has no pandas refine for wide rings:
+        past about 11 crossing edges per ring the predicate's generated
+        code leaves the JVM's JIT limit (measured on the salted join's
+        refine, see operators.spatial._SQL_REFINE_MAX_WIDTH).
 
         The (key, lat, lon) probe input is PERSISTED before the join, so
         actions over the same input run the forward transform once (the

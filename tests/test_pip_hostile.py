@@ -217,3 +217,30 @@ def test_vertices_edges_ulps_and_specials(spark, sql_engine, common_code):
 @settings(max_examples=4, deadline=None)
 def test_hostile_points_three_way(spark, sql_engine, common_code, points):
     _check(spark, sql_engine, common_code, points)
+
+
+@pytest.mark.parametrize("extra", [0, 1])
+def test_salted_refine_switches_past_measured_width(spark, extra):
+    """Rings of up to _SQL_REFINE_MAX_WIDTH crossing edges refine in
+    SQL, one edge more in the pandas_udf; both give _crossings'
+    verdicts, and every point is a candidate (one shared cover cell)."""
+    m = spatial._SQL_REFINE_MAX_WIDTH + extra
+    ang = (np.arange(m) + 0.25) * (2 * np.pi / m)
+    rad = np.where(np.arange(m) % 2 == 0, 0.03, 0.015)
+    ring = [(float(36.14 + r * np.sin(t)), float(140.15 + r * np.cos(t)))
+            for r, t in zip(rad, ang)]
+    assert spatial.edge_columns([ring])[0] == m
+    code = min(c for c, _ in spatial.polygon_mesh_cover([("star", ring)], UNIT))
+    rng = np.random.default_rng(m)
+    lat = 36.14 + rng.uniform(-0.035, 0.035, 400)
+    lon = 140.15 + rng.uniform(-0.035, 0.035, 400)
+    df = spark.createDataFrame(
+        [(k, float(a), float(b), code) for k, (a, b) in enumerate(zip(lat, lon))],
+        "pkey long, lat double, lon double, meshcode long")
+
+    out = spatial.bucketed_spatial_join(df, [("star", ring)], UNIT, hot_codes=[])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert ("ArrowEvalPython" in plan) == (extra > 0), plan
+    want = {int(k) for k in np.flatnonzero(spatial._crossings(lat, lon, ring) == 1)}
+    assert {r.pkey for r in out.collect()} == want
+    assert 0 < len(want) < 400
